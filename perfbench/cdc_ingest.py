@@ -22,7 +22,6 @@ session set is checked against DuckDB over the landed files.
 from __future__ import annotations
 
 import glob
-import inspect
 import os
 import shutil
 import statistics
@@ -42,7 +41,7 @@ KEYS = ["c_custkey"]
 COLUMNS = ["c_custkey", "c_name", "acctbal"]
 LOG_DDL = "c_custkey bigint, c_name string, acctbal decimal(12,2), op string, ver int"
 GAP = "30 minutes"
-LOOKUPS_PER_BATCH = 2
+LOOKUPS_PER_BATCH = 1
 
 
 def generate(root: str, seed: int) -> dict:
@@ -122,12 +121,6 @@ def references(spark, state: dict, exp: dict) -> None:
     exp["bucket"] = {r[0]: r[1] for r in rows}
 
 
-def _ddl(fn) -> dict:
-    """``schema_ddl=`` for the log's files where ``fn`` takes it (it skips
-    a footer-inference job; library versions before it lack the option)."""
-    return {"schema_ddl": LOG_DDL} if "schema_ddl" in inspect.signature(fn).parameters else {}
-
-
 def _files(path):
     return {os.path.join(d, n) for d, _, ns in os.walk(path) for n in ns if n.endswith(".parquet")}
 
@@ -190,8 +183,8 @@ def run_pass(p, spark, state: dict, exp: dict) -> None:
                 bytes_before = dir_bytes(log)
                 df.write.mode("append").parquet(log)
                 new = sorted(_files(log) - old)
-                append_zonemap(spark, log, new, **_ddl(append_zonemap))
-                append_bloom(spark, log, new, **_ddl(append_bloom))
+                append_zonemap(spark, log, new, schema_ddl=LOG_DDL)
+                append_bloom(spark, log, new, schema_ddl=LOG_DDL)
                 after = dir_bytes(log)
                 written["bytes"] += after[0] - bytes_before[0]
                 written["files"] += after[1] - bytes_before[1]
@@ -249,12 +242,12 @@ def run_pass(p, spark, state: dict, exp: dict) -> None:
                  lambda df: [tuple(r) for r in df.collect()],
                  check=lambda rows, live=live: expect(rows == ([live] if live else []), "point lookup differs"))
             p.op("point_log", "sources.sinks",
-                 lambda: read_indexed(spark, log, equals={"c_custkey": k}, **_ddl(read_indexed)),
+                 lambda: read_indexed(spark, log, equals={"c_custkey": k}, schema_ddl=LOG_DDL),
                  lambda df: sorted(r["ver"] for r in df.collect() if r["ver"] > 0),
                  check=lambda vers, hist=hist: expect(vers == hist, "log history lookup differs"))
         (lo, hi), n = exp["ranges"][b]
         p.op("range_log", "sources.sinks",
-             lambda: read_indexed(spark, log, ranges={"ver": (lo, hi)}, **_ddl(read_indexed)),
+             lambda: read_indexed(spark, log, ranges={"ver": (lo, hi)}, schema_ddl=LOG_DDL),
              lambda df: df.filter(F.col("ver").between(lo, hi)).count(),
              check=lambda got, n=n: expect(got == n, f"range lookup {got} != {n}"))
 
@@ -297,8 +290,8 @@ def finish(run, spark, state, tracer) -> dict:
     if run.extra.get("space_amp"):
         out["workload"]["space_amp"] = statistics.median(run.extra["space_amp"])
         out["layer"] = {
-            "sources.sinks.bytes_written": sum(run.extra["bytes_written"]),
-            "sources.sinks.files_written": sum(run.extra["files_written"]),
+            "sources.sinks.bytes_written": statistics.median(run.extra["bytes_written"]),
+            "sources.sinks.files_written": statistics.median(run.extra["files_written"]),
             "streaming.cdc_sink.files_rewritten": statistics.median(run.extra["files_rewritten"]),
         }
     if run.extra.get("lookup_yield"):

@@ -48,9 +48,9 @@ def _ts(us: np.ndarray) -> pa.Array:
 
 @dataclass(frozen=True)
 class DqShape:
-    n_orders: int = 15_000
-    n_users: int = 2_000
-    n_events: int = 20_000
+    n_orders: int = 6_000
+    n_users: int = 1_000
+    n_events: int = 8_000
     update_rate: float = 0.05
     insert_rate: float = 0.02
     delete_rate: float = 0.02
@@ -171,12 +171,12 @@ def gen_dq(root: str, seed: int, shape: DqShape = DqShape()) -> dict:
 
 @dataclass(frozen=True)
 class CorpusShape:
-    n_docs: int = 1_500
+    n_docs: int = 600
     copies: int = 1
     near_dup_rate: float = 0.05
-    n_vectors: int = 2_000
+    n_vectors: int = 800
     dim: int = 64
-    n_queries: int = 100
+    n_queries: int = 50
     vector_dup_rate: float = 0.03
 
 
@@ -242,13 +242,13 @@ def gen_corpus(root: str, seed: int, shape: CorpusShape = CorpusShape()) -> dict
 
 @dataclass(frozen=True)
 class CdcShape:
-    n_customers: int = 20_000
-    n_batches: int = 3
-    changes_per_batch: int = 2_000
+    n_customers: int = 8_000
+    n_batches: int = 2
+    changes_per_batch: int = 800
     insert_share: float = 0.2
     delete_share: float = 0.1
     key_skew: float = 1.2
-    events_per_batch: int = 4_000
+    events_per_batch: int = 1_500
     n_users: int = 500
 
 

@@ -64,11 +64,15 @@ def start_session(conf: Dict[str, str]):
 
 
 def host_stamp() -> dict:
-    """Load and fixed-work speed of the host; stored, never used to adjust."""
+    """Load and fixed-work speed of the host, and its cumulative CPU and
+    steal ticks (time a hypervisor gave this machine's CPUs to others);
+    stored, never used to adjust."""
     import numpy as np
 
     with open("/proc/loadavg") as fh:
         load = [float(x) for x in fh.read().split()[:3]]
+    with open("/proc/stat") as fh:
+        ticks = [int(x) for x in fh.readline().split()[1:9]]  # user .. steal
     t = time.perf_counter()
     x = 0
     for i in range(2_000_000):
@@ -79,7 +83,8 @@ def host_stamp() -> dict:
     for _ in range(8):
         a = a @ a * 1e-6
     np_gemm_ms = (time.perf_counter() - t) * 1000
-    return {"loadavg": load, "py_loop_ms": round(py_loop_ms, 1), "np_gemm_ms": round(np_gemm_ms, 1)}
+    return {"loadavg": load, "py_loop_ms": round(py_loop_ms, 1), "np_gemm_ms": round(np_gemm_ms, 1),
+            "cpu_ticks": sum(ticks), "steal_ticks": ticks[7]}
 
 
 def _tree(root_pid: int) -> Dict[int, int]:

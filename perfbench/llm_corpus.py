@@ -11,11 +11,15 @@ definition, cosine desc then id asc), both recomputed in Python/numpy.
 Connected components is checked against a union-find over the same
 pairs, cosine pairs against numpy, BPE encoding against the trained
 segmentation, packing against its budget and coverage contract, and
-``prepare_corpus`` for being the same on every pass.
+``prepare_corpus`` against its chunks recomputed in Python (quality
+gate, exact and near-dup dedup, md5 train/eval split, decontamination,
+chunking).
 """
 
 from __future__ import annotations
 
+import hashlib
+import math
 import os
 
 import numpy as np
@@ -31,6 +35,12 @@ COSINE = 0.95
 K = 10
 BPE_MERGES = 16
 PACK_BUDGET = 256
+# prepare_corpus defaults the reference below recomputes
+QUALITY = 0.5
+EVAL_FRACTION = 0.2
+CONTAMINATION = 0.8
+MAX_TOKENS = 512
+SPLIT_BUCKETS = 1_000_000
 
 
 def generate(root: str, seed: int) -> dict:
@@ -85,11 +95,13 @@ def oracle(root: str) -> dict:
         knn.update((int(qid), int(ids[t])) for t in top)
     docs = pq.read_table(os.path.join(root, "documents.parquet"), columns=["doc_id", "text"]).to_pydict()
     doc_words = {d: t.split() for d, t in zip(docs["doc_id"], docs["text"])}
+    jaccard = jaccard_pairs(doc_words, NEAR_DUP)
     return {
         "cos_sure": {(int(ids[i]), int(ids[j])) for i, j in zip(ii[s >= COSINE + 1e-4], jj[s >= COSINE + 1e-4])},
         "cos_maybe": {(int(ids[i]), int(ids[j])) for i, j in zip(ii[s >= COSINE - 1e-4], jj[s >= COSINE - 1e-4])},
         "doc_words": doc_words,
-        "jaccard": jaccard_pairs(doc_words, NEAR_DUP),
+        "jaccard": jaccard,
+        "chunks": corpus_chunks(dict(zip(docs["doc_id"], docs["text"])), doc_words, jaccard),
         "knn": knn,
     }
 
@@ -111,6 +123,48 @@ def jaccard_pairs(doc_words: dict, threshold: float, n: int = 3) -> set:
         inter = len(sets[a] & sets[b])
         if inter / (len(sets[a]) + len(sets[b]) - inter) >= threshold:
             out.add((a, b))
+    return out
+
+
+def _shingles(words, n: int = 3) -> set:
+    return {" ".join(words[i:i + n]) for i in range(len(words) - n + 1)} if len(words) >= n else {" ".join(words)}
+
+
+def _train_side(doc_id: int) -> bool:
+    """``hash_split``'s train side: md5 bucket of the rendered id."""
+    bucket = int(hashlib.md5(f"\x1f{doc_id}".encode()).hexdigest()[:8], 16) % SPLIT_BUCKETS
+    return bucket < round((1 - EVAL_FRACTION) * SPLIT_BUCKETS)
+
+
+def corpus_chunks(texts: dict, doc_words: dict, jaccard: set) -> list:
+    """``prepare_corpus(near_dup_threshold=NEAR_DUP)`` with default
+    settings, recomputed: sorted ``(doc_id, chunk_idx, n_chunk_tokens,
+    chunk_text)`` of the surviving train documents.  The generated text
+    is lowercase words and single spaces, so it is its own normalized
+    form and scores at least 0.45 + 0.3 * min(chars / 500, 1) for
+    quality without counting stopwords."""
+    for d, t in texts.items():
+        mean_len = len(t) / max(len(doc_words[d]), 1)
+        if not (t.replace(" ", "").isalpha() and 2 <= mean_len <= 12
+                and 0.45 + 0.3 * min(len(t) / 500, 1) >= QUALITY):
+            raise ValueError(f"document {d} is outside what the prepare_corpus reference scores")
+    keepers: dict = {}
+    for d in sorted(texts):
+        keepers.setdefault(texts[d], d)
+    kept = set(keepers.values())
+    clusters = union_find((a, b) for a, b in jaccard if a in kept and b in kept)
+    kept = {d for d in kept if clusters.get(d, d) == d}  # union_find roots are cluster minima
+    train = {d for d in kept if _train_side(d)}
+    eval_shingles = set().union(*(_shingles(doc_words[d]) for d in kept - train))
+    out = []
+    for d in sorted(train):
+        sh = _shingles(doc_words[d])
+        if round(len(sh & eval_shingles) / len(sh), 6) >= CONTAMINATION:
+            continue
+        w = doc_words[d]
+        for c in range(max(math.ceil(len(w) / MAX_TOKENS), 1)):
+            part = w[c * MAX_TOKENS:(c + 1) * MAX_TOKENS]
+            out.append((d, c, len(part), " ".join(part)))
     return out
 
 
@@ -142,15 +196,11 @@ def run_pass(p, spark, state: dict, exp: dict) -> None:
 
     docs, emb = state["documents"], state["embeddings"]
 
-    def corpus_check(out):
-        first = state.setdefault("corpus_result", out)
-        expect(out == first, "prepare_corpus differs between passes")
-        expect(out[0] > 0, "prepare_corpus returned no chunks")
-
     p.op("prepare_corpus", "operators.corpus",
          lambda: prepare_corpus(docs, near_dup_threshold=NEAR_DUP),
-         lambda df: tuple(df.agg(F.count(F.lit(1)), F.sum(F.hash("doc_id", "chunk_idx"))).first()),
-         check=corpus_check)
+         lambda df: sorted(tuple(r) for r in df.select("doc_id", "chunk_idx", "n_chunk_tokens", "chunk_text").collect()),
+         check=lambda rows: expect(rows == exp["chunks"], f"prepare_corpus: {len(rows)} chunks, "
+                                   f"{len(set(rows) ^ set(exp['chunks']))} differ from the reference"))
 
     n_docs = len(exp["doc_words"])
     p.op("minhash_signatures", "operators.dedup", lambda: minhash_signatures(docs),

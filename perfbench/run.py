@@ -4,18 +4,23 @@
     python3 perfbench/run.py --workload dq_suite --seed 1 --seconds 20 --trace 0
 
 Run from the root of a checkout.  Generates the workload's inputs from
-``--seed`` under ``.perfbench_work/`` in the checkout, sets up several
-times (session start, JVM warm-up, input generation and load) and
-reports the median as ``setup_s``, then runs closed-loop passes for
-``--seconds`` (at least one) and checks every output.
+``--seed`` under ``.perfbench_work/`` in the checkout and sets up once:
+input generation, JVM launch and session start, a JVM warm-up query and
+the input load; ``setup_s`` is that time.  Closed-loop passes then run
+for ``--seconds`` (at least one), and ``run_s`` is their median.  A pass
+is longer than the budgeted ``--seconds`` at the shipped sizes, so a run
+times one pass and that pass includes the JIT and code-generation
+warm-up of the queries it runs; an untimed warm-up pass would double the
+cost of a run (see ``workloads.json``).
 
 The last stdout line is ``{"correct", "attempted", "failed", "metrics"}``:
 with ``--trace 0`` the end-to-end metrics, with ``--trace 1`` the
 per-layer metrics of a traced run (Spark event log on, one span per call
-into a layer).  A traced run reports its own median pass time as
-``trace.run_s``; minus ``run_s`` of an untraced run of the same seed it
-is the tracing overhead.  The line before the result is a JSON report
-with per-operation medians, sample counts, input sizes and host stamps.
+into a layer), per pass.  A traced run reports its own median pass
+time as ``trace.run_s``; minus ``run_s`` of an untraced run of the same
+seed it is the tracing overhead.  The line before the result is a JSON
+report with per-operation medians, sample counts, input sizes and host
+stamps.
 """
 
 from __future__ import annotations
@@ -32,7 +37,6 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORKLOADS = ("dq_suite", "llm_corpus", "cdc_ingest")
-N_SETUPS = 3
 END_TO_END = ("setup_s", "run_s", "op_gmean_s", "peak_rss_mb")  # as in BENCHMARK.json
 # op_gmean_s counts a faster op as this long: below it a Python call's
 # clock jitter, not the library, sets the time, and one such op would
@@ -50,23 +54,29 @@ def parse_args(argv):
     return ap.parse_args(argv)
 
 
-def setup_once(wl, conf, seed, inputs, tracer):
-    """Session start + JVM warm-up + seeded input generation + load."""
+def setup(wl, conf, seed, inputs, tracer):
+    """Input generation, JVM launch, session start, JVM warm-up and input
+    load.  Returns ``(spark, state, exp, sizes, setup_s)``; the
+    benchmark's own references (DuckDB, numpy) are not timed."""
     from perfbench.harness import fresh_dir, start_session
 
     t0 = time.perf_counter()
+    fresh_dir(inputs)
+    sizes = wl.generate(inputs, seed)
+    gen_s = time.perf_counter() - t0
+    exp = wl.oracle(inputs)
+    t0 = time.perf_counter()
     spark = start_session(conf)
-    t_session = time.perf_counter()
     tracer.sc = spark.sparkContext
     if tracer.enabled:
         tracer.spans.append({"id": 0, "layer": "session", "name": "start_session", "pass": -1,
-                             "parent": None, "start": t0, "end": t_session})
+                             "parent": None, "start": t0, "end": time.perf_counter()})
     with tracer.span("session", "warmup", -1):
         spark.range(0, 200_000, numPartitions=4).selectExpr("sum(id * 2)").collect()
-    fresh_dir(inputs)
-    sizes = wl.generate(inputs, seed)
     state = wl.load(spark, inputs, tracer)
-    return spark, state, sizes, time.perf_counter() - t0
+    setup_s = gen_s + time.perf_counter() - t0
+    wl.references(spark, state, exp)
+    return spark, state, exp, sizes, setup_s
 
 
 def timed_passes(wl, spark, state, exp, run, seconds, rss):
@@ -144,24 +154,16 @@ def bench(args, wl, work, inputs, event_dir, harness, tracing):
     if traced:
         os.makedirs(event_dir)
     conf = harness.spark_conf(work, event_dir if traced else None)
-    setups = []
-    spark = None
-    for _ in range(N_SETUPS):
-        if spark is not None:
-            spark.stop()
-        tracer = tracing.Tracer(enabled=traced)  # only the last session is measured
-        spark, state, sizes, secs = setup_once(wl, conf, args.seed, inputs, tracer)
-        setups.append(secs)
-    exp = wl.oracle(inputs)
-    wl.references(spark, state, exp)
-
+    tracer = tracing.Tracer(enabled=traced)
     run = harness.Run(tracer)
+    spark, state, exp, sizes, setup_s = setup(wl, conf, args.seed, inputs, tracer)
     with harness.RssSampler() as rss:
         pass_s, cpu_s = timed_passes(wl, spark, state, exp, run, args.seconds, rss)
     extra = wl.finish(run, spark, state, tracer)
     spark.stop()
     stamps["after"] = harness.host_stamp()
-
+    stamps["steal_share"] = ((stamps["after"]["steal_ticks"] - stamps["before"]["steal_ticks"])
+                             / max(stamps["after"]["cpu_ticks"] - stamps["before"]["cpu_ticks"], 1))
     lat = [x for xs in run.latencies.values() for x in xs]
     if not lat:
         print("perfbench: no operation succeeded", file=sys.stderr)
@@ -173,7 +175,7 @@ def bench(args, wl, work, inputs, event_dir, harness, tracing):
     # every end-to-end figure of this workload, by name with its unit;
     # the result line carries the END_TO_END subset
     named = {
-        "setup_s": (statistics.median(setups), "s"),
+        "setup_s": (setup_s, "s"),
         "run_s": (statistics.median(pass_s), "s"),
         "op_gmean_s": (statistics.geometric_mean(max(v, OP_FLOOR_S) for v in per_op.values()), "s"),
         "op_p50_s": (statistics.median(lat), "s"),
@@ -187,17 +189,18 @@ def bench(args, wl, work, inputs, event_dir, harness, tracing):
         named[k] = (v, "s" if k.endswith("_s") else "ratio")
     report = {
         "workload": args.workload, "seed": args.seed, "seconds": args.seconds, "trace": args.trace,
-        "nproc": harness.NPROC, "setups_s": setups, "pass_s": pass_s, "pass_cpu_s": cpu_s,
+        "nproc": harness.NPROC, "pass_s": pass_s, "pass_cpu_s": cpu_s,
         "op_samples": len(lat), "per_op_p50_s": per_op,
         "per_op_samples": {k: len(v) for k, v in run.latencies.items()},
         "inputs": sizes, "failures": run.failures[:10], "stamps": stamps,
         "metrics": {k: {"value": v, "unit": u} for k, (v, u) in named.items()},
     }
     if traced:
-        layers = tracing.layer_metrics(tracer.spans, tracing.parse_event_log(tracing.find_event_log(event_dir)))
+        jobs = tracing.parse_event_log(tracing.find_event_log(event_dir))
+        layers = tracing.layer_metrics(tracer.spans, jobs, len(pass_s))
         steps = [sp for sp in tracer.spans if "step" in sp]
         pipes = [sp for sp in tracer.spans if sp["layer"] == "plans.pipeline" and "step" not in sp]
-        layers.update(tracing.dag_metrics(steps, pipes))
+        layers.update({k: v / len(pass_s) for k, v in tracing.dag_metrics(steps, pipes).items()})
         layers.update(extra.get("layer", {}))
         layers.update({f"workload.{k}": v for k, (v, _) in named.items()})
         layers["trace.run_s"] = named["run_s"][0]

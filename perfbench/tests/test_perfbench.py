@@ -86,6 +86,20 @@ def test_union_find_partition():
     assert llm_corpus.partition_of(assign) == {frozenset({5, 6, 7}), frozenset({1, 2})}
 
 
+def test_corpus_reference_dedups_and_chunks():
+    words = gen.WORDS
+    a, dup, near, long_doc = [i for i in range(1, 200) if llm_corpus._train_side(i)][:4]
+    base = [words[(i * 5) % len(words)] for i in range(30)]
+    long_words = [words[(i * 7 + 3) % len(words)] for i in range(600)]
+    texts = {a: " ".join(base), dup: " ".join(base),
+             near: " ".join(base[:-1] + ["zzz"]), long_doc: " ".join(long_words)}
+    doc_words = {d: t.split() for d, t in texts.items()}
+    got = llm_corpus.corpus_chunks(texts, doc_words, llm_corpus.jaccard_pairs(doc_words, 0.8))
+    assert got == [(a, 0, 30, texts[a]),
+                   (long_doc, 0, 512, " ".join(long_words[:512])),
+                   (long_doc, 1, 88, " ".join(long_words[512:]))]
+
+
 def test_tail_picks_highest_percentile_with_ten_beyond():
     assert harness.tail(list(range(1, 10)))[0] == 0.5
     q, v = harness.tail([float(i) for i in range(1, 41)])
@@ -140,9 +154,9 @@ def test_event_log_attribution(tmp_path):
     assert [j["tasks"] for j in jobs] == [2, 1]
     spans = [
         {"id": 1, "parent": None, "layer": "operators.pk", "start": 0.0, "end": 10.0,
-         "wall_start": 0.0, "wall_end": 10.0, "construct_s": 4.0},
+         "wall_start": 0.0, "wall_end": 10.0, "construct_s": 4.0, "pass": 0},
         {"id": 2, "parent": 1, "layer": "operators.diff", "start": 1.0, "end": 2.0,
-         "wall_start": 1.0, "wall_end": 2.0},
+         "wall_start": 1.0, "wall_end": 2.0, "pass": 0},
     ]
     m = tracing.layer_metrics(spans, jobs)
     # job 0 carries both tags: the innermost span (diff) gets it
@@ -154,6 +168,24 @@ def test_event_log_attribution(tmp_path):
     # job 1 is untagged (a library thread) and submitted at t=5.5: pk is open
     assert (m["operators.pk.jobs"], m["operators.pk.construct_s"]) == (1, 4.0)
     assert m["operators.pk.busy_s"] == pytest.approx(9.0)
+
+
+def test_setup_counts_once_and_passes_are_averaged(tmp_path):
+    log = tmp_path / "app-1"
+    _write_log(log, [
+        {"Event": "SparkListenerJobStart", "Job ID": j, "Stage IDs": [j], "Submission Time": 0,
+         "Properties": {"spark.job.tags": f"pb{j + 1}"}} for j in range(3)
+    ] + [{"Event": "SparkListenerTaskEnd", "Stage ID": j, "Task Metrics": {"Executor CPU Time": 10**9}}
+         for j in range(3)])
+    spans = [
+        {"id": 1, "parent": None, "layer": "sources.testdata", "start": 0.0, "end": 1.0, "pass": -1},
+        {"id": 2, "parent": None, "layer": "operators.rules", "start": 1.0, "end": 3.0, "pass": 0},
+        {"id": 3, "parent": None, "layer": "operators.rules", "start": 3.0, "end": 7.0, "pass": 1},
+    ]
+    m = tracing.layer_metrics(spans, tracing.parse_event_log(str(log)), n_passes=2)
+    assert (m["sources.testdata.jobs"], m["sources.testdata.busy_s"]) == (1, 1.0)
+    assert (m["operators.rules.jobs"], m["operators.rules.cpu_s"]) == (1, 1.0)
+    assert m["operators.rules.busy_s"] == pytest.approx(3.0)
 
 
 def test_metric_names_match_benchmark_json():

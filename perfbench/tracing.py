@@ -167,7 +167,7 @@ def parse_event_log(path: str) -> List[dict]:
     """Per-job totals from one uncompressed Spark event log (a file, or
     a rolling-log directory of ``events_<n>_*`` files).
 
-    Returns ``[{"job": id, "tags": [...], "submitted": epoch_s, "group": str, "tasks": n,
+    Returns ``[{"job": id, "tags": [...], "submitted": epoch_s, "tasks": n,
     "cpu_s", "gc_s", "shuffle_bytes", "spill_bytes"}]``.
     """
     jobs: Dict[int, dict] = {}
@@ -180,7 +180,6 @@ def parse_event_log(path: str) -> List[dict]:
             tags = [t for t in (props.get("spark.job.tags") or "").split(",") if t]
             jobs[jid] = {
                 "job": jid, "tags": tags, "submitted": ev.get("Submission Time", 0) / 1e3,
-                "group": props.get("spark.jobGroup.id") or props.get("spark.job.description") or "",
                 "tasks": 0, "cpu_s": 0.0, "gc_s": 0.0, "shuffle_bytes": 0, "spill_bytes": 0,
             }
             for sid in ev.get("Stage IDs", ()):
@@ -208,44 +207,45 @@ def find_event_log(log_dir: str) -> str:
     return logs[-1]
 
 
-def layer_metrics(spans: List[dict], jobs: List[dict]) -> Dict[str, float]:
-    """Aggregate spans and attributed jobs into ``<layer>.<counter>``."""
+def layer_metrics(spans: List[dict], jobs: List[dict], n_passes: int = 1) -> Dict[str, float]:
+    """Aggregate spans and attributed jobs into ``<layer>.<counter>``.
+
+    Set-up spans (pass -1) count once, the spans of the timed passes per
+    pass: their sum over ``n_passes``."""
     by_id = {sp["id"]: sp for sp in spans}
     selfs = self_times(spans)
     acc = {layer: {"busy_s": 0.0, "jobs": 0, "tasks": 0, "cpu_s": 0.0, "construct_s": 0.0,
                    "gc_s": 0.0, "shuffle_mb": 0.0, "spill_mb": 0.0} for layer in LAYERS}
+    weight = {sp["id"]: 1.0 if sp["pass"] < 0 else 1.0 / n_passes for sp in spans}
     for sp in spans:
         a = acc.get(sp["layer"])
         if a is not None:
-            a["busy_s"] += selfs[sp["id"]]
-            a["construct_s"] += sp.get("construct_s", 0.0)
+            a["busy_s"] += selfs[sp["id"]] * weight[sp["id"]]
+            a["construct_s"] += sp.get("construct_s", 0.0) * weight[sp["id"]]
     for job in jobs:
         ids = [int(t[len(TAG_PREFIX):]) for t in job["tags"]
                if t.startswith(TAG_PREFIX) and t[len(TAG_PREFIX):].isdigit()]
         ids = [i for i in ids if i in by_id]
         if ids:
-            layer = by_id[max(ids)]["layer"]  # innermost: children open after parents
+            owner = by_id[max(ids)]  # innermost: children open after parents
         else:
             # threads a span did not open (DAG workers inside an operator)
             # do not carry its tags: charge the newest span open at submit
             t = job.get("submitted", 0)
             open_spans = [sp for sp in spans if "wall_start" in sp
                           and sp["wall_start"] <= t <= sp.get("wall_end", t)]
-            if open_spans:
-                layer = max(open_spans, key=lambda sp: sp["wall_start"])["layer"]
-            elif "#" in job["group"]:
-                layer = "plans.pipeline"
-            else:
+            if not open_spans:
                 continue
-        a = acc.get(layer)
+            owner = max(open_spans, key=lambda sp: sp["wall_start"])
+        a, w = acc.get(owner["layer"]), weight[owner["id"]]
         if a is None:
             continue
-        a["jobs"] += 1
-        a["tasks"] += job["tasks"]
-        a["cpu_s"] += job["cpu_s"]
-        a["gc_s"] += job["gc_s"]
-        a["shuffle_mb"] += job["shuffle_bytes"] / 2**20
-        a["spill_mb"] += job["spill_bytes"] / 2**20
+        a["jobs"] += w
+        a["tasks"] += job["tasks"] * w
+        a["cpu_s"] += job["cpu_s"] * w
+        a["gc_s"] += job["gc_s"] * w
+        a["shuffle_mb"] += job["shuffle_bytes"] / 2**20 * w
+        a["spill_mb"] += job["spill_bytes"] / 2**20 * w
     out = {}
     for layer, a in acc.items():
         for key, value in a.items():
