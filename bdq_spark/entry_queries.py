@@ -9947,104 +9947,67 @@ def streaming_matview_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _DRIVER_PRIORITY = [
-    # ROUND-13 WINDOW (optimization round; see OPTIMIZATION_r13.md and
-    # tests/window_policy.py): changed-code-first (the r9 hard rule) —
-    # the entries gating this round's optimization work in
-    # similarity.py / dedup.py / clustering.py / ivf.py /
-    # entry_queries.py (every one must value-hash bit-identically: an
-    # optimization that changes results is a regression, not a win).
-    # Then ALL 30 entries whose latest driver row is r9 (they hit the
-    # newest-3 staleness edge when r13 lands — VERDICT r12 item 2),
-    # then the optimization targets of the corpus/BPE/graph families.
-    # Invariant (pytest): first-50 union all CORRECTNESS_r* rounds
-    # covers the whole registry, and no entry's latest driver row is
-    # older than newest-3.
-    "embedding_near_dup_pairs_multitable",
-    "persisted_vector_index_probe",
-    "knn_rerank_embeddings",
-    "streaming_ingest_vector_index",
-    "streaming_ingest_dedup_index",
-    "minhash_lsh_near_dup",
-    "incremental_minhash_near_dup",
-    "persisted_minhash_index_probe",
-    "knn_lsh_embeddings",
-    "knn_multiprobe_embeddings",
-    "embedding_near_dup_pairs",
-    "embedding_dedup_clusters",
-    "embedding_kmeans_quantized",
-    "knn_ivf_quantized",
-    # r9-stale refresh (latest driver row is r9 — the newest-3 edge;
-    # all 30, so the r13 histogram holds nothing older than r10).
-    # Several double as changed-code gates (minhash/simhash/jaccard/
-    # ivf/quantized families touched by the optimization commits).
-    "doc_quality",
-    "doc_repetition",
-    "doc_stats",
-    "fk_broken_sampled",
-    "histogram_orders_totalprice",
-    "incremental_minhash_md5",
-    "indexed_scan_orders",
-    "knn_ivf_embeddings",
-    "knn_quantized_embeddings",
-    "language_confusion",
-    "latest_events",
-    "latest_events_conflict",
-    "minhash_md5_near_dup",
-    "near_dup_edit_verified",
-    "near_dup_jaccard",
-    "pk_validate_lineitem_composite",
-    "pk_validate_lineitem_orderkey",
-    "pricing_summary",
-    "profile_drift_orders",
-    "quantiles_lineitem_by_flag",
-    "simhash_fingerprints",
-    "simhash_md5_pairs",
-    "simhash_pairs",
-    "stateful_running_counter",
-    "stateful_sessionize",
-    "streaming_interval_join",
-    "surrogate_key_hash_customer",
-    "surrogate_key_string_customer",
-    "vocab_stats_documents",
-    "zonemap_pruned_scan",
-    # changed-code gates of this round's optimization commits
-    # (components.py / tokenizer.py / stateful.py / sinks.py /
-    # entry_queries.py — see tests/window_policy.py)
-    "corpus_training_pipeline",
-    "documents_deduped",
-    "pagerank_part_supplier",
+    # Changed-code gates first (the r9 hard rule; declared per module
+    # in tests/window_policy.py): the isolated-loop graph operators,
+    # the BPE trainer, the pipeline's table writes and the quantized
+    # IVF probe — each must value-hash bit-identically.
     "near_dup_clusters",
-    "near_dup_kcore",
-    "events_running_zscore",
-    # positions 51+: gating entries covered by in-prefix siblings (the
-    # driver checks a 50-entry prefix; these stay declared so the
-    # window-policy invariant holds, and every one's latest driver row
-    # is >= r10 so none hits the staleness edge this round — they lead
-    # the r14 rotation): bpe_train_merges/doc_bpe_packing (train_bpe
-    # gated by corpus_training_pipeline's end-to-end replay),
-    # corpus_prepare_neardup (CC gated by documents_deduped/
-    # near_dup_clusters), docs_kcore_graph (kcore gated by
-    # near_dup_kcore)
-    "bpe_train_merges",
-    "doc_bpe_packing",
+    "embedding_dedup_clusters",
+    "documents_deduped",
     "corpus_prepare_neardup",
+    "pagerank_part_supplier",
     "docs_kcore_graph",
-    # pk.py's shared-count sweep (O8 default path gated by the two
-    # in-prefix pk_validate_* entries)
-    "pk_minimal_combinations",
-    # triangle_counts' shared degree checkpoint (the jaccard pair
-    # funnel feeding it is gated by the in-prefix near_dup_* entries)
-    "near_dup_triangles",
-    # sinks.py's explicit-schema sidecar reads (zonemap twin gated by
-    # the in-prefix zonemap_pruned_scan / indexed_scan_orders)
-    "bloom_pruned_scan",
-    # cdc_sink.py's per-trigger empty-batch guard reorder
-    "streaming_cdc_merge",
-    # r14 changed-code gates: multimodal decode parallelization
-    # (_spread_narrow_scan + select-before-mapInPandas)
-    "multimodal_mjpeg_pixel_stats",
-    "multimodal_rle8_pixel_stats",
-    "multimodal_video_frames",
+    "near_dup_kcore",
+    "bpe_train_merges",
+    "bpe_token_counts",
+    "doc_bpe_packing",
+    "corpus_training_pipeline",
+    "knn_ivf_quantized",
+    "pipeline_odd_even",
+    # Staleness rotation: every entry whose latest driver row is r10
+    # or older (the newest-3 bound of
+    # test_every_entry_has_plan_golden_and_driver_coverage).
+    "shipping_priority",
+    "local_supplier_volume",
+    "nation_pair_volume",
+    "returned_items_top_customers",
+    "top_customers_by_revenue",
+    "order_priority_check",
+    "paragraph_dedup_documents",
+    "incremental_dedup_batch",
+    "multimodal_audio_decode",
+    "multimodal_bmp_pixel_stats",
+    "pruned_scan_orders",
+    "multimodal_adpcm_pcm_stats",
+    "events_daily_by_type",
+    "events_dedup_watermark",
+    "column_combinations",
+    "dag_states",
+    "csv_ingest_events",
+    "bucketed_join_orders_customer",
+    "streaming_foreach_batch",
+    "statestore_roundtrip",
+    "orders_grouping_sets",
+    "window_suite_orders",
+    "doc_stratified_sample",
+    "doc_mixture_upsample",
+    "doc_temperature_mixture",
+    "doc_lm_score",
+    "orders_hash_split",
+    "range_join_price_tiers",
+    "profile_orders_numeric",
+    "token_vocab_top100",
+    "doc_training_order",
+    "forecast_revenue_change",
+    "brand_quantity_revenue",
+    "events_kmv_setops",
+    "events_retention_cohorts",
+    "events_funnel_conversion",
+    "customer_scd2_history",
+    "docs_boolean_search",
+    "docs_bm25_search",
+    "docs_phrase_search",
+    "indexed_append_scan_orders",
 ]
 
 

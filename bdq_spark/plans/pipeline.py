@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from bdq_spark.plans.dag import DAG
 from bdq_spark.plans.statestore import CatalogPersistedStateStore
 from bdq_spark.plans.ui_logger import SparkUILogger
+from bdq_spark.session import cloned
 
 __all__ = [
     "SparkPipeline",
@@ -833,15 +834,15 @@ def _write_table_v1_fallback(
             log.info("Creating new table %s", name)
             writer.saveAsTable(name)
         else:
-            previous = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                df.write.mode("overwrite").insertInto(name)
-            finally:
-                if previous is not None:
-                    spark.conf.set(
-                        "spark.sql.sources.partitionOverwriteMode", previous
-                    )
+            # dynamic mode on a private clone: the caller's session conf
+            # is never written (concurrent steps share that session), and
+            # insertInto ignores a per-write partitionOverwriteMode option
+            cloned(
+                df, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+            ).write.mode("overwrite").insertInto(name)
+            # the write ran on the clone, so drop the caller's cached
+            # file listing of the table
+            spark.catalog.refreshTable(name)
 
 
 def _write_table(

@@ -17,10 +17,17 @@ and `get_spark` never overrides an already-running session's conf.
 from __future__ import annotations
 
 import os
+from importlib.util import find_spec
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 __all__ = ["get_spark", "builder_defaults"]
+
+# the JVM ``Dataset.ofRows`` moved to ``org.apache.spark.sql.classic`` in
+# Spark 4.0, together with the ``pyspark.sql.classic`` package; a 3.5
+# runtime keeps it on ``org.apache.spark.sql.Dataset``.  Detected once
+# at import, from the PySpark that matches the JVM.
+_CLASSIC_DATASET = find_spec("pyspark.sql.classic") is not None
 
 
 def builder_defaults(builder: SparkSession.Builder) -> SparkSession.Builder:
@@ -51,3 +58,35 @@ def get_spark(spark: SparkSession | None = None) -> SparkSession:
         .appName("bdq_spark")
         .getOrCreate()
     )
+
+
+def cloned(df: DataFrame, conf: dict) -> DataFrame:
+    """``df`` on a PRIVATE clone of its session, with ``conf`` set on the
+    clone.
+
+    The isolation mechanism of every iterative loop in the package: the
+    caller's session conf is NEVER written, because that session is
+    shared with whatever else plans on it at the same time (concurrent
+    ``SparkPipeline`` steps).  Code that needs a conf pin (AQE off, a
+    data-sized shuffle width) runs on the clone and :func:`moved` its
+    result back.  ``cloneSession`` (~2 ms) shares the SparkContext —
+    executors and checkpointed blocks — and copies the runtime SQL
+    conf."""
+    parent = df.sparkSession
+    clone = SparkSession(
+        parent.sparkContext, jsparkSession=parent._jsparkSession.cloneSession()
+    )
+    for key, value in conf.items():
+        clone.conf.set(key, value)
+    return moved(df, clone)
+
+
+def moved(df: DataFrame, session: SparkSession) -> DataFrame:
+    """``df`` re-planned on ``session``.  Frames cross by LOGICAL PLAN,
+    so a checkpoint crosses as its ``LogicalRDD`` leaf with partitioning
+    and statistics intact, and a lazy result moved back is planned by
+    the caller exactly as if it had been built there."""
+    sql = session._jvm.org.apache.spark.sql
+    dataset = sql.classic.Dataset if _CLASSIC_DATASET else sql.Dataset
+    jdf = dataset.ofRows(session._jsparkSession, df._jdf.logicalPlan())
+    return DataFrame(jdf, session)

@@ -429,187 +429,220 @@ def test_shuffle_path_parity_all_ops(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
+def test_moved_uses_the_runtime_dataset_class(spark):
+    """``moved`` calls ``Dataset.ofRows``, which lives in
+    ``org.apache.spark.sql.classic`` from Spark 4.0 and in
+    ``org.apache.spark.sql`` on 3.5.  The import-time choice must name
+    a real class on the running JVM (py4j resolves a missing one to a
+    JavaPackage, which fails at call time)."""
+    from py4j.java_gateway import JavaClass
+
+    from bdq_spark import session
+
+    sql = spark._jvm.org.apache.spark.sql
+    chosen = sql.classic.Dataset if session._CLASSIC_DATASET else sql.Dataset
+    assert isinstance(chosen, JavaClass)
+    assert session._CLASSIC_DATASET == (int(spark.version.split(".")[0]) >= 4)
+    df = spark.range(3)
+    assert session.moved(df, spark).collect() == df.collect()
+
+
 def test_keyed_checkpoint_elides_round_exchanges(spark):
-    """The mechanism the shuffle path rests on: inside ``_aqe_disabled``
-    a ``_keyed_checkpoint``-ed relation keeps its HashPartitioning
-    through the LogicalRDD, so the pagerank round shape (edge join on
-    src -> per-dst sum -> rank-update join on id) plans with exactly ONE
-    exchange — the aggregate.  If a Spark upgrade stops preserving
-    partitioning through localCheckpoint, this fails loudly."""
+    """The mechanism the shuffle path rests on: on a private AQE-off
+    clone a ``_keyed_checkpoint``-ed relation keeps its
+    HashPartitioning through the LogicalRDD, so the pagerank round
+    shape (edge join on src -> per-dst sum -> rank-update join on id)
+    plans with exactly ONE exchange — the aggregate.  If a Spark
+    upgrade stops preserving partitioning through localCheckpoint, this
+    fails loudly."""
     from pyspark.sql import functions as F
 
-    from bdq_spark.operators.components import (
-        _aqe_disabled,
-        _keyed_checkpoint,
-    )
+    from bdq_spark.operators.components import _keyed_checkpoint
+    from bdq_spark.session import cloned, moved
 
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        e = spark.range(2000).select(
+    e = cloned(
+        spark.range(2000).select(
             (F.col("id") % 97).alias("src"), (F.col("id") % 89).alias("dst")
+        ),
+        {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+        },
+    )
+    iso = e.sparkSession
+    assert iso is not spark
+    assert iso.conf.get("spark.sql.adaptive.enabled") == "false"
+    r = moved(
+        spark.range(97).select(F.col("id"), F.lit(1.0).alias("rank")), iso
+    )
+    ep = _keyed_checkpoint(e, "src")
+    rp = _keyed_checkpoint(r, "id")
+    contrib = (
+        ep.join(rp, ep.src == rp.id)
+        .groupBy("dst")
+        .agg(F.sum("rank").alias("c"))
+    )
+    nodes = rp.select("id")
+    ranks = nodes.join(
+        contrib, nodes.id == contrib.dst, "left"
+    ).select("id", F.coalesce("c", F.lit(0.0)).alias("rank"))
+    plan = ranks._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") != "-1"
+
+
+def _ref_pagerank_quantized(edges, iterations, scale=10**12):
+    """Integer twin of ``_ref_pagerank`` (the update rule documented on
+    ``pagerank_quantized``)."""
+    nodes = sorted({v for e in edges for v in e})
+    n = len(nodes)
+    deg = {}
+    for u, _ in edges:
+        deg[u] = deg.get(u, 0) + 1
+    r = {v: scale // n for v in nodes}
+    base = (15 * (scale // n)) // 100
+    for _ in range(iterations):
+        dangling = sum(r[v] for v in nodes if v not in deg)
+        c = {v: 0 for v in nodes}
+        for u, v in edges:
+            c[v] += r[u] // deg[u]
+        r = {v: base + (85 * (c[v] + dangling // n)) // 100 for v in nodes}
+    return r
+
+
+_PAIRS = [(1, 2), (2, 3), (5, 6), (7, 8), (8, 9)]
+_DIGRAPH = [(1, 2), (2, 3), (3, 1), (4, 1), (3, 5)]
+_KCORE_EDGES = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)]
+
+
+def _run_isolated_loop(spark, op, bound, fail):
+    """Run ``op`` on a small input; returns ``(out, got, want)``.
+    ``fail`` makes the operator raise: a real non-convergence where the
+    operator has a round bound, else the caller-supplied injection."""
+    kw = {} if bound is None else {"broadcast_max_nodes": bound}
+    if op == "connected_components":
+        from bdq_spark.operators import connected_components
+
+        pairs = spark.createDataFrame(_PAIRS, "id_a long, id_b long")
+        out = connected_components(
+            pairs, max_iterations=1 if fail else 20, **kw
         )
-        r = spark.range(97).select(
-            F.col("id"), F.lit(1.0).alias("rank")
+        want = {(1, 1, True), (2, 1, False), (3, 1, False), (5, 5, True),
+                (6, 5, False), (7, 7, True), (8, 7, False), (9, 7, False)}
+        return out, set(map(tuple, out.collect())), want
+    if op == "kcore":
+        from bdq_spark.operators.components import kcore
+
+        df = spark.createDataFrame(_KCORE_EDGES, "src long, dst long")
+        out = kcore(df, k=2, max_rounds=1 if fail else 20, **kw)
+        return out, set(map(tuple, out.collect())), {(1, 2), (2, 2), (3, 2)}
+    if op == "pagerank":
+        from bdq_spark.operators.components import pagerank
+
+        df = spark.createDataFrame(_DIGRAPH, "src long, dst long")
+        out = pagerank(df, iterations=4, **kw)
+        got = {r.id: round(r.rank, 9) for r in out.collect()}
+        want = {
+            v: round(x, 9)
+            for v, x in _ref_pagerank(_DIGRAPH, iterations=4).items()
+        }
+        return out, got, want
+    if op == "pagerank_quantized":
+        from bdq_spark.operators.components import pagerank_quantized
+
+        df = spark.createDataFrame(_DIGRAPH, "src long, dst long")
+        out = pagerank_quantized(df, iterations=4, **kw)
+        got = {r.id: r.rank_q for r in out.collect()}
+        return out, got, _ref_pagerank_quantized(_DIGRAPH, iterations=4)
+    assert op == "train_bpe"
+    from test_tokenizer import CORPUS, _docs_df, _ref_train_bpe
+
+    from bdq_spark.operators.tokenizer import train_bpe
+
+    merges, out = train_bpe(_docs_df(spark), n_merges=25)
+    got = (merges, {r["word"]: tuple(r["syms"]) for r in out.collect()})
+    return out, got, _ref_train_bpe(CORPUS, n_merges=25)
+
+
+@pytest.mark.parametrize(
+    "op,bound",
+    [
+        (op, bound)
+        for op in (
+            "connected_components", "pagerank", "pagerank_quantized", "kcore"
         )
-        with _aqe_disabled(spark):
-            assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-            ep = _keyed_checkpoint(e, "src")
-            rp = _keyed_checkpoint(r, "id")
-            contrib = (
-                ep.join(rp, ep.src == rp.id)
-                .groupBy("dst")
-                .agg(F.sum("rank").alias("c"))
+        for bound in (None, 0)
+    ]
+    + [("train_bpe", None)],
+)
+def test_iterative_loops_never_write_caller_session_conf(
+    spark, monkeypatch, op, bound
+):
+    """Concurrent SparkPipeline steps share one session, so an
+    iterative loop must never write that session's conf — its hand
+    pins (AQE off, a data-sized shuffle width) live on a private clone.
+    Checked from INSIDE the loop (every checkpoint a loop takes reads
+    the caller's conf), after the operator raises, and on the result:
+    equal to the reference, and a frame of the caller's session that
+    joins with the caller's own frames.  ``bound=0`` forces the
+    co-partitioned regime of the graph operators; there the keyed
+    checkpoints cross between the clone and the caller's session, and
+    every round must still plan exactly ONE exchange (its aggregate) —
+    the partitioning reuse that regime exists for."""
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = {k: spark.conf.get(k) for k in keys}
+    seen = []
+    round_plans = []
+    inject = {"on": False}
+    frame_cls = type(spark.range(1))
+    real_checkpoint = frame_cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        session = self.sparkSession
+        seen.append(
+            (
+                {k: spark.conf.get(k) for k in keys},
+                session is spark,
+                session.conf.get("spark.sql.adaptive.enabled"),
             )
-            nodes = rp.select("id")
-            ranks = nodes.join(
-                contrib, nodes.id == contrib.dst, "left"
-            ).select("id", F.coalesce("c", F.lit(0.0)).alias("rank"))
-            plan = ranks._jdf.queryExecution().executedPlan().toString()
+        )
+        if inject["on"] and session is not spark:
+            raise RuntimeError("injected mid-loop failure")
+        if not kwargs.get("eager", args[0] if args else True):
+            # the lazy checkpoints are the per-round frames
+            round_plans.append(
+                self._jdf.queryExecution().executedPlan().toString()
+            )
+        return real_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+
+    out, got, want = _run_isolated_loop(spark, op, bound, fail=False)
+    assert got == want
+    assert seen, "the loop took no checkpoint"
+    assert all(conf == before for conf, _, _ in seen), seen
+    # the hand pin still applies — on a session that is not the caller's
+    assert any(
+        not on_caller and aqe == "false" for _, on_caller, aqe in seen
+    ), seen
+    assert out.sparkSession is spark
+    if op == "train_bpe":
+        mine = spark.createDataFrame([("the", "a")], "word string, nm string")
+    else:
+        mine = spark.createDataFrame([(1, "a")], "id long, nm string")
+    assert out.join(mine, mine.columns[0]).count() == 1
+    if bound == 0 and op != "kcore":
+        assert round_plans, "no per-round checkpoint seen"
+        for plan in round_plans:
             assert plan.count("Exchange") == 1, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
-
-def test_aqe_disabled_restores_on_exception(spark):
-    """The co-partitioned scope must restore the session's AQE conf even
-    when the iterative section raises (e.g. a convergence bound)."""
-    import pytest as _p
-
-    from bdq_spark.operators.components import _aqe_disabled
-
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    with _p.raises(RuntimeError, match="boom"):
-        with _aqe_disabled(spark):
-            assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-            raise RuntimeError("boom")
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-
-    # and through a real operator failure past the cutover: a 6-node
-    # path needs >1 round, so max_iterations=1 raises inside the scope
-    from bdq_spark.operators import connected_components
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(6)], "id_a long, id_b long"
-    )
-    with _p.raises(RuntimeError, match="did not converge"):
-        connected_components(
-            pairs, max_iterations=1, broadcast_max_nodes=0
-        )
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-
-
-def test_graph_session_isolates_aqe_from_concurrent_queries(spark):
-    """VERDICT r11 item 6: ``graph_session=True`` runs the iterative
-    section on a CLONED session, so while a past-the-cutover graph op
-    holds its AQE-off scope, a query planned concurrently on the
-    CALLER's session still plans with AQE.  Proven three ways: (a) the
-    AQE scope is entered on a session that is NOT the caller's, and
-    the caller's conf reads AQE-on INSIDE the scope; (b) results are
-    identical to the default path on both regimes; (c) the result
-    frame is re-bound to the caller's session, so downstream
-    composition (joins with caller-session frames) works."""
-    import bdq_spark.operators.components as comp
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6), (7, 8), (8, 9)],
-        "id_a long, id_b long",
-    )
-    baseline = sorted(
-        map(tuple, comp.connected_components(pairs).collect())
-    )
-
-    seen = {}
-    real_scope = comp._aqe_disabled
-
-    from contextlib import contextmanager
-
-    @contextmanager
-    def spy_scope(scoped_spark):
-        with real_scope(scoped_spark):
-            seen["scoped_is_caller"] = scoped_spark is spark
-            seen["scoped_jsession_is_caller"] = (
-                scoped_spark._jsparkSession == spark._jsparkSession
-            )
-            # the concurrent-planning guarantee, observed mid-scope:
-            # the caller session still reports AQE on (and a frame
-            # planned on it now would plan adaptively)
-            seen["caller_aqe_mid_scope"] = spark.conf.get(
-                "spark.sql.adaptive.enabled"
-            )
-            seen["scoped_aqe_mid_scope"] = scoped_spark.conf.get(
-                "spark.sql.adaptive.enabled"
-            )
-            yield
-
-    comp._aqe_disabled = spy_scope
-    try:
-        # broadcast_max_nodes=0 forces the co-partitioned (AQE-off)
-        # path on this tiny graph
-        out = comp.connected_components(
-            pairs, broadcast_max_nodes=0, graph_session=True
-        )
-        got = sorted(map(tuple, out.collect()))
-    finally:
-        comp._aqe_disabled = real_scope
-
-    assert got == baseline
-    assert seen["scoped_is_caller"] is False
-    assert seen["scoped_jsession_is_caller"] is False
-    assert seen["caller_aqe_mid_scope"] == "true"
-    assert seen["scoped_aqe_mid_scope"] == "false"
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-
-    # (c) the result is the CALLER's frame: composing with a
-    # caller-session relation must not raise a cross-session error
-    out2 = comp.connected_components(pairs, graph_session=True)
-    assert out2.sparkSession is spark
-    names = spark.createDataFrame([(1, "a"), (5, "b")], "id long, nm string")
-    assert out2.join(names, "id").count() == 2
-
-    # pagerank: identical ranks through the isolated session on both
-    # regimes (broadcast and co-partitioned)
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (4, 1)], "src long, dst long"
-    )
-    p0 = {r.id: round(r.rank, 9) for r in comp.pagerank(e).collect()}
-    p1 = {
-        r.id: round(r.rank, 9)
-        for r in comp.pagerank(e, graph_session=True).collect()
-    }
-    p2 = {
-        r.id: round(r.rank, 9)
-        for r in comp.pagerank(
-            e, broadcast_max_nodes=0, graph_session=True
-        ).collect()
-    }
-    assert p0 == p1 == p2
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-
-    # pagerank_quantized and kcore carry the same option (the whole
-    # _aqe_disabled-holding family): identical results on both regimes
-    q0 = sorted(map(tuple, comp.pagerank_quantized(e).collect()))
-    q1 = sorted(
-        map(
-            tuple,
-            comp.pagerank_quantized(
-                e, broadcast_max_nodes=0, graph_session=True
-            ).collect(),
-        )
-    )
-    assert q0 == q1
-    k0 = sorted(map(tuple, comp.kcore(e, k=2).collect()))
-    k1 = sorted(
-        map(
-            tuple,
-            comp.kcore(
-                e, k=2, broadcast_max_nodes=0, graph_session=True
-            ).collect(),
-        )
-    )
-    assert k0 == k1
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    seen.clear()
+    inject["on"] = op in ("pagerank", "pagerank_quantized", "train_bpe")
+    with pytest.raises(RuntimeError, match="did not converge|injected"):
+        _run_isolated_loop(spark, op, bound, fail=True)
+    assert all(conf == before for conf, _, _ in seen), seen
+    assert {k: spark.conf.get(k) for k in keys} == before
 
 
 def test_data_checkpoint_stores_serialized_blocks(spark):
@@ -635,29 +668,6 @@ def test_data_checkpoint_stores_serialized_blocks(spark):
     # at least one live cached RDD is memory+serialized (ours); the
     # default-deserialized level may coexist from other fixtures
     assert (True, False) in levels, levels
-
-
-def test_aqe_scope_overlap_restores_outermost(spark):
-    """ADVICE r10 (medium): two OVERLAPPING _aqe_disabled scopes on one
-    session (concurrent pipeline steps) must not race the save/restore —
-    the naive per-scope version let scope B save the 'false' A had just
-    set, so B's restore leaked AQE-off session-wide.  Depth-counted:
-    the user's value is saved at the outermost entry, AQE stays off
-    while ANY scope is live, and the outermost exit restores."""
-    from bdq_spark.operators.components import _aqe_disabled
-
-    key = "spark.sql.adaptive.enabled"
-    assert spark.conf.get(key) == "true"
-    a = _aqe_disabled(spark)
-    b = _aqe_disabled(spark)
-    a.__enter__()
-    b.__enter__()  # overlapping, non-nested exit order below
-    assert spark.conf.get(key) == "false"
-    a.__exit__(None, None, None)
-    # a scope is still live: AQE must STAY off (old code restored here)
-    assert spark.conf.get(key) == "false"
-    b.__exit__(None, None, None)
-    assert spark.conf.get(key) == "true"
 
 
 def test_shuffle_partitions_auto_fallback(spark):
@@ -722,19 +732,18 @@ def test_depin_small_edges_keeps_cutover_capable_graphs(spark):
     its keyed pin (partitioning reuse is the whole point there)."""
     from pyspark.sql import functions as F
 
-    from bdq_spark.operators.components import (
-        _depin_small_edges,
-        _keyed_checkpoint,
-        _aqe_disabled,
-    )
+    from bdq_spark.operators.components import _depin_small_edges, _keyed_checkpoint
+    from bdq_spark.session import cloned
 
-    with _aqe_disabled(spark):
-        e = _keyed_checkpoint(
+    e = _keyed_checkpoint(
+        cloned(
             spark.range(2_000).select(
                 F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
             ),
-            "src",
-        )
+            {"spark.sql.adaptive.enabled": "false"},
+        ),
+        "src",
+    )
     n_before = e.rdd.getNumPartitions()
     # tiny vs its cutover: coalesced below the pin
     assert (

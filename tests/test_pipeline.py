@@ -165,6 +165,48 @@ def test_step_spark_table_write_and_multi_output(spark, tmp_path):
     assert spark.table("t_odd").count() == 15
 
 
+def test_step_spark_table_overwrite_partitions(spark, monkeypatch):
+    """mode="overwrite_partitions" on the V1 path replaces only the
+    partitions the step produced: untouched partitions survive, and the
+    shared session's conf is never written (the dynamic mode lives on a
+    private clone — concurrent steps on that session would otherwise
+    race a save/set/restore of it)."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.createDataFrame(
+        [(1, "a"), (2, "b")], "v int, p string"
+    ).write.partitionBy("p").format("parquet").saveAsTable("t_dyn")
+    # populate the session's cached listing of the table
+    assert spark.table("t_dyn").count() == 2
+
+    conf_cls = type(spark.conf)
+    real_set = conf_cls.set
+    caller_writes = []
+
+    def spy(self, k, v):
+        if self is spark.conf:
+            caller_writes.append((k, v))
+        return real_set(self, k, v)
+
+    monkeypatch.setattr(conf_cls, "set", spy)
+
+    ppn = SparkPipeline("dyn", spark=spark)
+
+    @ppn.step_spark_table(
+        outputs="t_dyn", mode="overwrite_partitions", format="parquet",
+        partition_by=["p"],
+    )
+    def refresh_a(step):
+        return spark.createDataFrame([(10, "a")], "v int, p string")
+
+    ppn()
+    assert sorted(map(tuple, spark.table("t_dyn").collect())) == [
+        (2, "b"), (10, "a"),
+    ]
+    assert caller_writes == []
+    assert spark.conf.get(key) == before
+
+
 def test_state_store_and_metrics(spark):
     spark.sql("CREATE DATABASE IF NOT EXISTS bdq_state")
     ppn = SparkPipeline("metered", spark=spark, state_store_database="bdq_state")

@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
-"""Same-box focused bench A/B: old git rev (worktree) vs the working
-tree, machine-stamped — the artifact the bench-A/B rule requires
+"""Same-box focused bench A/B: old git rev (exported copy) vs the
+working tree, machine-stamped — the artifact the bench-A/B rule requires
 (tests/window_policy.py::BENCH_AB, enforced by
 test_plan_regressions.py::test_hot_module_changes_carry_bench_ab).
 
@@ -16,7 +16,8 @@ Usage::
         [--module path ...] [--out BENCH_AB_rN.json]
 
 Runs ``SPARK_GRAFT_BENCH_ONLY=<entries> python bench.py`` twice —
-once in a throwaway worktree at ``<old_rev>``, once in this repo —
+once in a throwaway ``git archive`` export of ``<old_rev>`` (under
+``$TMPDIR``), once in this repo —
 and writes/merges the artifact with both JSON lines verbatim (host
 stamps included).  Runs are SEQUENTIAL on purpose: concurrent Spark
 drivers would contend for the box and poison both numbers.  Read the
@@ -29,6 +30,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
@@ -84,23 +86,23 @@ def main() -> int:
             out_path = alt
     out_path = os.path.join(REPO, out_path)
 
-    wt = tempfile.mkdtemp(prefix="bdq_ab_wt_")
-    subprocess.run(
-        ["git", "worktree", "add", "--detach", wt, old_rev],
+    old_dir = tempfile.mkdtemp(prefix="bdq_ab_old_")
+    archive = subprocess.run(
+        ["git", "archive", old_rev],
         cwd=REPO, check=True, capture_output=True,
+    )
+    subprocess.run(
+        ["tar", "-x", "-C", old_dir], input=archive.stdout, check=True
     )
     try:
         print(f"old side ({old_rev}) ...", flush=True)
-        old = _bench(wt, entries)
+        old = _bench(old_dir, entries)
         print(json.dumps(old))
         print("new side (working tree) ...", flush=True)
         new = _bench(REPO, entries)
         print(json.dumps(new))
     finally:
-        subprocess.run(
-            ["git", "worktree", "remove", "--force", wt],
-            cwd=REPO, capture_output=True,
-        )
+        shutil.rmtree(old_dir, ignore_errors=True)
 
     art = {}
     if os.path.exists(out_path):
