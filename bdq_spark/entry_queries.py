@@ -9948,9 +9948,10 @@ def streaming_matview_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DRIVER_PRIORITY = [
     # Changed-code gates first (the r9 hard rule; declared per module
-    # in tests/window_policy.py): the isolated-loop graph operators,
-    # the BPE trainer, the pipeline's table writes and the quantized
-    # IVF probe — each must value-hash bit-identically.
+    # in tests/window_policy.py): connected components' driver regime
+    # leads, then the isolated-loop graph operators, the BPE trainer,
+    # the pipeline's table writes and the quantized IVF probe — each
+    # must value-hash bit-identically.
     "near_dup_clusters",
     "embedding_dedup_clusters",
     "documents_deduped",

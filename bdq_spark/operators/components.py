@@ -13,22 +13,29 @@ means 2-4 rounds — the regime where this simple scheme beats the
 alternating large-star/small-star construction (Kiveris et al., "CC in
 MapReduce and Beyond", SoCC'14) that wins on pathological long chains.
 
-Scale mechanics, per round:
+Scale mechanics, three regimes picked by graph size:
 
-- one shuffle: edges join labels on src, then min-aggregate per dst,
-  merged with the current label (all partial-combinable);
-- a LAZY ``localCheckpoint`` after every round — without checkpointing
-  the plan DOUBLES per iteration and the job dies of lineage, the
-  classic Spark iterative-algorithm failure mode;
-- early termination via a changed-label count, which doubles as the
-  action that materializes the round's checkpoint blocks — exactly one
-  job per round.
+- a pair relation of at most ``broadcast_max_nodes // 2`` rows (every
+  near-dup graph in practice) is fetched to the driver by ONE bounded
+  collect and the rounds run there in vectorized numpy — no Spark job
+  per round at all, because a Spark round on such a graph is pure
+  fixed per-job overhead;
+- a larger graph whose node table still fits ``broadcast_max_nodes``
+  runs one fused broadcast min-aggregate per round;
+- past that, co-partitioned shuffle rounds.  In both Spark regimes a
+  LAZY ``localCheckpoint`` after every round keeps the plan flat
+  (without it the plan DOUBLES per iteration, the classic Spark
+  iterative-algorithm failure mode) and a changed-label count both
+  detects the fixpoint and materializes the round's blocks.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, DataType, StructField, StructType
 
 from bdq_spark.operators._checkpoint import data_checkpoint
 from bdq_spark.session import cloned, moved
@@ -118,16 +125,13 @@ def _keyed_checkpoint(df: DataFrame, key: str) -> DataFrame:
     return data_checkpoint(df.repartition(_shuffle_partitions(spark), key))
 
 
-# fused-setup regime floor, in INPUT PAIR rows: a pair relation at or
-# below half the node cutover cannot produce a past-cutover graph
-# (n_nodes <= 2 * n_pairs), so its edge checkpoint's hash(a)
-# partitioning would never be reused — the rounds broadcast the node
-# side — and pinning a tiny edge relation at the session shuffle
-# partition count just schedules that many near-empty tasks in EVERY
-# per-round job (measured at sf0.1: embedding_dedup_clusters 5.6 s with
-# the AQE-coalesced setup vs 12.1 s pinned at 32 partitions).  Small
-# graphs keep the AQE-planned symmetrize-distinct; only graphs that can
-# cross the cutover pay the fused co-partitioned setup.
+# small-graph floor, in INPUT PAIR rows: a pair relation at or below
+# half the node cutover cannot produce a past-cutover graph
+# (n_nodes <= 2 * n_pairs).  Connected components runs such a graph on
+# the driver; PageRank keeps its Spark rounds but de-pins the edge
+# checkpoint, whose hash(src) partitioning would never be reused
+# (measured at sf0.1: a tiny edge relation pinned at 32 partitions
+# doubled the per-round wall of the clustering entry).
 def _may_exceed_cutover(n_pairs: int, broadcast_max_nodes: int) -> bool:
     return 2 * n_pairs > broadcast_max_nodes
 
@@ -161,6 +165,90 @@ def _depin_small_edges(e: DataFrame, broadcast_max_nodes: int) -> DataFrame:
     return e
 
 
+def _not_converged(max_iterations: int) -> RuntimeError:
+    return RuntimeError(
+        f"connected_components did not converge in {max_iterations} "
+        "rounds (graph diameter exceeds the bound)"
+    )
+
+
+def _components_on_driver(
+    batches: list, caller, id_type: DataType, max_iterations: int
+) -> DataFrame:
+    """The small-graph regime of :func:`connected_components`: the same
+    synchronous min-label rounds as the Spark regimes, over the pair
+    relation already fetched as Arrow ``batches`` of ``(a, b)``.
+
+    Ids are mapped to dense ranks with ``np.unique``; ranks preserve the
+    id order (Spark's order too: UTF-8 byte order equals code point
+    order), so the min rank IS the min id.  Both edge directions are
+    grouped by target once, and each round is one gather plus one
+    segmented min.  A pair with a null endpoint adds no edge, its other
+    endpoint is still a node, and a null id yields one
+    ``(None, None, None)`` row — what the co-partitioned regime
+    computes (its label join never matches a null key)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    schema = StructType(
+        [
+            StructField("id", id_type),
+            StructField("cluster_id", id_type),
+            StructField("is_keeper", BooleanType()),
+        ]
+    )
+    if batches:
+        t = pa.Table.from_batches(batches)
+        a, b = t.column(0), t.column(1)
+        both = pc.and_(a.is_valid(), b.is_valid())
+        # nulls dropped BEFORE to_numpy: a nullable integer array with
+        # nulls would convert to float64 and lose ids past 2**53
+        ids = np.unique(
+            np.concatenate(
+                [a.drop_null().to_numpy(), b.drop_null().to_numpy()]
+            )
+        )
+        src = np.searchsorted(ids, pc.filter(a, both).to_numpy())
+        dst = np.searchsorted(ids, pc.filter(b, both).to_numpy())
+        has_null = a.null_count + b.null_count > 0
+    else:
+        ids = np.empty(0, dtype=object)
+        src = dst = np.empty(0, dtype=np.intp)
+        has_null = False
+
+    tgt = np.concatenate([dst, src])
+    nbr = np.concatenate([src, dst])
+    order = np.argsort(tgt, kind="stable")
+    tgt, nbr = tgt[order], nbr[order]
+    starts = np.flatnonzero(np.diff(tgt, prepend=-1))
+    heads = tgt[starts]
+    labels = np.arange(ids.size)
+    for _ in range(max_iterations):
+        new = labels.copy()
+        if nbr.size:
+            new[heads] = np.minimum(
+                labels[heads], np.minimum.reduceat(labels[nbr], starts)
+            )
+        if np.array_equal(new, labels):
+            break
+        labels = new
+    else:
+        raise _not_converged(max_iterations)
+    out = caller.createDataFrame(
+        pd.DataFrame(
+            {
+                "id": ids,
+                "cluster_id": ids[labels],
+                "is_keeper": labels == np.arange(ids.size),
+            }
+        ),
+        schema,
+    )
+    if has_null:
+        out = out.union(caller.createDataFrame([(None, None, None)], schema))
+    return out
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -171,37 +259,46 @@ def connected_components(
     """Label every node appearing in ``pairs`` with its component's
     minimum member id.
 
-    The caller's session conf is never written: the AQE-off setup and
-    the pinned rounds run on a private clone
-    (:func:`~bdq_spark.session.cloned`) and the result is the caller's
+    Output: ``(id, cluster_id, is_keeper)`` — one row per distinct node,
+    typed like the input ids; ``is_keeper`` marks the minimum-id member,
+    giving a deterministic survivor per duplicate cluster.  A pair with
+    a null endpoint adds no edge (its other endpoint is still a node),
+    and a null id yields one ``(None, None, None)`` row.  Raises if
+    ``max_iterations`` rounds don't reach the fixpoint (pathologically
+    long chains — raise the bound or pre-split the graph).
+
+    Every regime runs the same synchronous min-label rounds and stops
+    after the first round that changes nothing, so labels and the raise
+    bound do not depend on the regime:
+
+    - **driver** (at most ``broadcast_max_nodes // 2`` pairs, the
+      common case — near-dup graphs are sized by the duplicate
+      population, not the corpus): after the input checkpoint, ONE
+      bounded collect fetches the pairs and proves they fit, and the
+      rounds run in numpy on the driver; the result is a
+      ``createDataFrame`` of the caller's session.
+    - **broadcast** (more pairs, node table ``<= broadcast_max_nodes``):
+      each round is ONE FUSED min-aggregate — the broadcast label
+      join's neighbor contributions union the labels' own rows and a
+      single keyed shuffle takes the min per id (``_round_broadcast``).
+    - **co-partitioned** (node table past the bound): edges are
+      hash-partitioned by source and labels by id once at setup (with
+      AQE off, so the checkpoints keep their partitioning), the
+      per-round label relation inherits hash(id) through its lazy
+      checkpoint, and each round costs exactly one exchange — the
+      min-aggregate; the edge relation is shuffled once, never per
+      round.
+
+    The caller's session conf is never written: the two Spark regimes
+    run their AQE-off setup and pinned rounds on a private clone
+    (:func:`~bdq_spark.session.cloned`), and the result is the caller's
     frame.
-
-    Output: ``(id, cluster_id, is_keeper)`` — one row per distinct node;
-    ``is_keeper`` marks the minimum-id member, giving a deterministic
-    survivor per duplicate cluster.  Raises if ``max_iterations`` rounds
-    don't reach the fixpoint (pathologically long chains — raise the
-    bound or pre-split the graph).
-
-    When the node table is small (``<= broadcast_max_nodes``, counted
-    once after the input checkpoint), each round is ONE FUSED
-    min-aggregate: the broadcast label join's neighbor contributions
-    union the labels' own rows and a single keyed shuffle takes the
-    min per id (``_round_broadcast`` — provably equal to the classic
-    neighbor-min + merge-join round, with one broadcast build instead
-    of two and no second join).  Near-dup graphs are sized by the
-    duplicate population, not the corpus, so this is the common case.  A larger graph takes the CO-PARTITIONED shuffle path:
-    edges are hash-partitioned by source and labels by id once at setup
-    (with AQE off, so the checkpoints keep their partitioning), the
-    per-round label relation inherits hash(id) through its lazy
-    checkpoint (the merge join's left side), and each
-    round again costs exactly one exchange — the min-aggregate; the
-    edge relation is shuffled once at setup, never per round.  Values
-    are exact integers on either path, so the result is identical.
     """
-    # checkpoint the INPUT first: the union below reads the pair relation
-    # twice (both edge directions), and the upstream pair producers
-    # (LSH banding, Jaccard verify) are the expensive part of the whole
-    # clustering query — without this they would execute twice
+    # checkpoint the INPUT first: past the driver regime the union below
+    # reads the pair relation twice (both edge directions), and the
+    # upstream pair producers (LSH banding, Jaccard verify) are the
+    # expensive part of the whole clustering query — without this they
+    # would execute again after the bounded collect
     directed = data_checkpoint(
         pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     )
@@ -210,30 +307,31 @@ def connected_components(
     def _both_ways(d: DataFrame) -> DataFrame:
         return d.union(d.select(F.col("b").alias("a"), F.col("a").alias("b")))
 
-    # the count is one cheap job over the checkpoint blocks just
-    # materialized; it picks the setup regime BEFORE the symmetrize
-    # shuffle runs, so small graphs never get pinned wide
-    n_pairs = directed.count()
-    if _may_exceed_cutover(n_pairs, broadcast_max_nodes):
-        # ONE symmetrize-dedup shuffle, captured with hash(a) on an
-        # AQE-off clone: the per-partition dropDuplicates rides the
-        # repartition exchange (hash(a) satisfies the (a, b)
-        # clustering), and past the cutover the rounds run on this
-        # clone and reuse this partitioning without a second edge
-        # materialization — see :func:`pagerank`
-        edges = data_checkpoint(
-            _both_ways(cloned(directed, {_AQE: "false"}))
-            .repartition(_shuffle_partitions(caller), "a")
-            .dropDuplicates()
+    # one job fetches the pairs AND proves they fit the driver regime.
+    # ``_collect_as_arrow`` backs ``toPandas`` on every PySpark >= 3.0
+    # (the public ``toArrow`` is 4.0+), needs no Arrow conf on the
+    # caller's session, and keeps nulls as a validity mask instead of
+    # turning a nullable long column into float64
+    max_pairs = broadcast_max_nodes // 2
+    batches = directed.limit(max_pairs + 1)._collect_as_arrow()
+    if sum(b.num_rows for b in batches) <= max_pairs:
+        return _components_on_driver(
+            batches,
+            caller,
+            _both_ways(directed).schema["a"].dataType,
+            max_iterations,
         )
-    else:
-        # small graph (cannot cross the node cutover): the rounds
-        # broadcast the label side, so edge partitioning is never
-        # reused — let AQE plan the symmetrize-dedup and COALESCE the
-        # checkpoint to the data's natural width instead of pinning a
-        # sub-partition-size relation at the session shuffle count
-        # (see :func:`_may_exceed_cutover` for the measured cliff)
-        edges = data_checkpoint(_both_ways(directed).distinct())
+    del batches
+    # ONE symmetrize-dedup shuffle, captured with hash(a) on an AQE-off
+    # clone: the per-partition dropDuplicates rides the repartition
+    # exchange (hash(a) satisfies the (a, b) clustering), and past the
+    # cutover the rounds run on this clone and reuse this partitioning
+    # without a second edge materialization — see :func:`pagerank`
+    edges = data_checkpoint(
+        _both_ways(cloned(directed, {_AQE: "false"}))
+        .repartition(_shuffle_partitions(caller), "a")
+        .dropDuplicates()
+    )
     labels = (
         moved(edges, caller)
         .select(F.col("a").alias("id"))
@@ -262,7 +360,10 @@ def connected_components(
         One jump per round only shortcuts one chase level; the log-
         diameter bound needs per-round compression to a fixpoint,
         which costs more joins than the rounds it saves here.)"""
-        contrib = edges.join(
+        # a null ``b`` is no edge: its contribution would land in the
+        # null id's group, which the co-partitioned label join never
+        # matches (a null ``a`` never joins, in either regime)
+        contrib = edges.where(F.col("b").isNotNull()).join(
             F.broadcast(labels), edges.a == labels.id
         ).select(F.col("b").alias("id"), "comp", F.lit(None).cast(
             labels.schema["comp"].dataType
@@ -362,15 +463,11 @@ def connected_components(
                 labels = new_labels.drop("__changed")
                 if changed == 0:
                     return _done(labels)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            "rounds (graph diameter exceeds the bound)"
-        )
+        raise _not_converged(max_iterations)
 
     if n_nodes > broadcast_max_nodes:
-        # n_nodes <= 2 * n_pairs, so the edges are on the AQE-off setup
-        # clone and already carry hash(a); only the label relation
-        # needs keying
+        # the edges are on the AQE-off setup clone and already carry
+        # hash(a); only the label relation needs keying
         labels = _keyed_checkpoint(moved(labels, edges.sparkSession), "id")
     else:
         # broadcast-regime rounds: every loop query is one node-scale

@@ -12,6 +12,12 @@ def _collect(df):
     return {r.id: (r.cluster_id, r.is_keeper) for r in df.collect()}
 
 
+def _cc_rows(df, **kw):
+    return sorted(
+        map(tuple, connected_components(df, **kw).collect()), key=repr
+    )
+
+
 def test_chain_triangle_and_disjoint(spark):
     pairs = spark.createDataFrame(
         [
@@ -124,8 +130,89 @@ def _union_find(edges):
 )
 def test_matches_union_find(spark, edges):
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r.id: r.cluster_id for r in connected_components(pairs).collect()}
-    assert got == _union_find(edges)
+    got = _cc_rows(pairs)
+    assert {r[0]: r[1] for r in got} == _union_find(edges)
+    # the driver regime (default bound) equals the co-partitioned one
+    assert got == _cc_rows(pairs, broadcast_max_nodes=0)
+
+
+# regime parity: the driver regime (default bound on a small graph), the
+# broadcast band and the co-partitioned regime (``broadcast_max_nodes=0``)
+
+
+@pytest.mark.parametrize(
+    "id_type,edges",
+    [
+        (
+            "int",
+            # self-loop, duplicate pair, reversed pair, isolated self-loop
+            [(3, 1), (1, 3), (1, 3), (2, 2), (7, 5), (5, 6), (9, 9)],
+        ),
+        (
+            "string",
+            # 'é' sorts after 'z' (UTF-8 byte order = code point order)
+            [("z", "é"), ("é", "z"), ("é", "é"), ("b", "z"), ("q", "p"),
+             ("p", "q"), ("ü", "ü")],
+        ),
+        ("int", []),
+        ("string", []),
+    ],
+)
+def test_regime_parity_and_id_types(spark, id_type, edges):
+    pairs = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
+    driver = connected_components(pairs)
+    copart = connected_components(pairs, broadcast_max_nodes=0)
+    want = pairs.schema["id_a"].dataType
+    assert [f.dataType for f in driver.schema.fields[:2]] == [want, want]
+    assert [f.dataType for f in copart.schema.fields[:2]] == [want, want]
+    got = sorted(map(tuple, driver.collect()))
+    assert got == sorted(map(tuple, copart.collect()))
+    ref = _union_find(edges)
+    assert got == sorted((i, c, i == c) for i, c in ref.items())
+
+
+@pytest.mark.parametrize("bound", [None, 7, 0])
+def test_null_ids_same_in_every_regime(spark, bound):
+    """A pair with a null endpoint adds no edge, its other endpoint is
+    still a node, and the null id is one ``(None, None, None)`` row.
+    ``bound=7`` puts the 4 pairs past the driver regime (2 * 4 > 7) with
+    the 6-node table inside the broadcast band; ``0`` forces the
+    co-partitioned regime."""
+    kw = {} if bound is None else {"broadcast_max_nodes": bound}
+    pairs = spark.createDataFrame(
+        [(1, 2), (None, 3), (3, 4), (5, None)], "id_a long, id_b long"
+    )
+    assert _cc_rows(pairs, **kw) == sorted(
+        [(1, 1, True), (2, 1, False), (3, 3, True), (4, 3, False),
+         (5, 5, True), (None, None, None)],
+        key=repr,
+    )
+
+
+def test_small_graph_job_count(spark):
+    """Guard the driver regime's job budget: the input checkpoint and the
+    one bounded collect.  With Arrow on (``get_spark``'s default) the
+    result is a ``LocalRelation`` whose collect runs no job; without it
+    the result is RDD-backed and the caller's collect is one more."""
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 40, 2)], "id_a long, id_b long"
+    )
+    arrow = "spark.sql.execution.arrow.pyspark.enabled"
+    was = spark.conf.get(arrow)
+    try:
+        for on, budget in (("false", 3), ("true", 2)):
+            spark.conf.set(arrow, on)
+            group = f"cc-job-guard-{on}"
+            sc.setJobGroup(group, group)
+            try:
+                assert len(connected_components(pairs).collect()) == 40
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            assert n_jobs <= budget, (on, n_jobs)
+    finally:
+        spark.conf.set(arrow, was)
 
 
 def test_apply_dedup_clusters_end_to_end(spark):
@@ -617,15 +704,32 @@ def test_iterative_loops_never_write_caller_session_conf(
         return real_checkpoint(self, *args, **kwargs)
 
     monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    from bdq_spark.operators import components
+
+    clones = []
+    real_cloned = components.cloned
+
+    def cloned_spy(df, conf):
+        clones.append(conf)
+        return real_cloned(df, conf)
+
+    monkeypatch.setattr(components, "cloned", cloned_spy)
 
     out, got, want = _run_isolated_loop(spark, op, bound, fail=False)
     assert got == want
     assert seen, "the loop took no checkpoint"
     assert all(conf == before for conf, _, _ in seen), seen
-    # the hand pin still applies — on a session that is not the caller's
-    assert any(
-        not on_caller and aqe == "false" for _, on_caller, aqe in seen
-    ), seen
+    if op == "connected_components" and bound is None:
+        # the driver regime runs its rounds in numpy: no per-round
+        # checkpoint and no clone session
+        assert not round_plans and not clones, (round_plans, clones)
+        assert all(on_caller for _, on_caller, _ in seen), seen
+    else:
+        # the hand pin still applies — on a session that is not the
+        # caller's
+        assert any(
+            not on_caller and aqe == "false" for _, on_caller, aqe in seen
+        ), seen
     assert out.sparkSession is spark
     if op == "train_bpe":
         mine = spark.createDataFrame([("the", "a")], "word string, nm string")

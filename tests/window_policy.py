@@ -32,7 +32,8 @@ rotation in ``bdq_spark/entry_queries.py``.
 #
 # Since the round-14 boundary: one isolation mechanism for iterative
 # loops (a private cloned session, ``session.cloned``) replaces the
-# session-wide AQE/conf scopes and the opt-in isolated-graph option.
+# session-wide AQE/conf scopes and the opt-in isolated-graph option;
+# then connected components' small graphs moved to driver-side rounds.
 # Every change is behaviour-preserving — declared entries must compute
 # byte-identical results.
 TOUCHED = {
@@ -53,17 +54,17 @@ TOUCHED = {
         "corpus_training_pipeline",
         "pipeline_odd_even",
     ],
-    # CC, PageRank (both twins) and kcore run their AQE-off setup and
-    # their pinned rounds on a private clone; the caller's session conf
-    # is never written.  Same hand pins, same plans.
+    # connected components runs graphs of at most
+    # broadcast_max_nodes // 2 pairs on the driver (one bounded pair
+    # collect, numpy min-label rounds) instead of the broadcast Spark
+    # loop; every CC-backed entry is such a graph.  (The earlier
+    # private-clone isolation of CC, PageRank and kcore is gated by the
+    # session.py entries above.)
     "bdq_spark/operators/components.py": [
         "near_dup_clusters",
         "embedding_dedup_clusters",
         "documents_deduped",
         "corpus_prepare_neardup",
-        "pagerank_part_supplier",
-        "docs_kcore_graph",
-        "near_dup_kcore",
     ],
     # train_bpe's merge loop runs AQE-off on a private clone.
     "bdq_spark/operators/tokenizer.py": [
@@ -105,7 +106,7 @@ EXEMPT = {
 BENCH_AB = {
     # focused same-box A/Bs vs the parent commit (tools/bench_ab.py)
     "bdq_spark/session.py": "BENCH_AB_r15.json",
-    "bdq_spark/operators/components.py": "BENCH_AB_r15.json",
+    "bdq_spark/operators/components.py": "BENCH_AB_r16.json",
     "bdq_spark/operators/tokenizer.py": "BENCH_AB_r15.json",
     "bdq_spark/plans/pipeline.py": "BENCH_AB_r15.json",
     "bdq_spark/operators/ivf.py": "BENCH_AB_r15.json",
