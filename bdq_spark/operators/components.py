@@ -16,10 +16,10 @@ MapReduce and Beyond", SoCC'14) that wins on pathological long chains.
 Scale mechanics, three regimes picked by graph size:
 
 - a pair relation of at most ``broadcast_max_nodes // 2`` rows (every
-  near-dup graph in practice) is fetched to the driver by ONE bounded
-  collect and the rounds run there in vectorized numpy — no Spark job
-  per round at all, because a Spark round on such a graph is pure
-  fixed per-job overhead;
+  near-dup graph in practice) is fetched to the driver by ONE collect
+  and the rounds run there in vectorized numpy — no Spark job per
+  round at all, because a Spark round on such a graph is pure fixed
+  per-job overhead;
 - a larger graph whose node table still fits ``broadcast_max_nodes``
   runs one fused broadcast min-aggregate per round;
 - past that, co-partitioned shuffle rounds.  In both Spark regimes a
@@ -179,7 +179,7 @@ def _components_on_driver(
     synchronous min-label rounds as the Spark regimes, over the pair
     relation already fetched as Arrow ``batches`` of ``(a, b)``.
 
-    Ids are mapped to dense ranks with ``np.unique``; ranks preserve the
+    Ids are mapped to dense ranks by one ``np.unique``; ranks preserve the
     id order (Spark's order too: UTF-8 byte order equals code point
     order), so the min rank IS the min id.  Both edge directions are
     grouped by target once, and each round is one gather plus one
@@ -201,15 +201,22 @@ def _components_on_driver(
         t = pa.Table.from_batches(batches)
         a, b = t.column(0), t.column(1)
         both = pc.and_(a.is_valid(), b.is_valid())
+        lone = pc.invert(both)
         # nulls dropped BEFORE to_numpy: a nullable integer array with
-        # nulls would convert to float64 and lose ids past 2**53
-        ids = np.unique(
-            np.concatenate(
-                [a.drop_null().to_numpy(), b.drop_null().to_numpy()]
-            )
+        # nulls would convert to float64 and lose ids past 2**53.  One
+        # np.unique over the edge endpoints and the lone endpoints of
+        # null pairs gives the sorted ids and every endpoint's dense id
+        ends = [
+            pc.filter(a, both),
+            pc.filter(b, both),
+            pc.filter(a, lone).drop_null(),
+            pc.filter(b, lone).drop_null(),
+        ]
+        n_edges = len(ends[0])
+        ids, dense = np.unique(
+            np.concatenate([e.to_numpy() for e in ends]), return_inverse=True
         )
-        src = np.searchsorted(ids, pc.filter(a, both).to_numpy())
-        dst = np.searchsorted(ids, pc.filter(b, both).to_numpy())
+        src, dst = dense[:n_edges], dense[n_edges : 2 * n_edges]
         has_null = a.null_count + b.null_count > 0
     else:
         ids = np.empty(0, dtype=object)
@@ -234,18 +241,28 @@ def _components_on_driver(
         labels = new
     else:
         raise _not_converged(max_iterations)
-    out = caller.createDataFrame(
-        pd.DataFrame(
-            {
-                "id": ids,
-                "cluster_id": ids[labels],
-                "is_keeper": labels == np.arange(ids.size),
-            }
-        ),
-        schema,
+
+    def frame(cols: dict) -> DataFrame:
+        # the Arrow conversion ``createDataFrame`` runs only when the
+        # session enables Arrow, called directly so the result never
+        # depends on that conf: without it ``createDataFrame`` converts,
+        # verifies and pickles every row in Python and ships them from
+        # the driver as an RDD
+        return caller._create_from_pandas_with_arrow(
+            pd.DataFrame(cols), schema, caller._jconf.sessionLocalTimeZone()
+        )
+
+    out = frame(
+        {
+            "id": ids,
+            "cluster_id": ids[labels],
+            "is_keeper": labels == np.arange(ids.size),
+        }
     )
     if has_null:
-        out = out.union(caller.createDataFrame([(None, None, None)], schema))
+        out = out.union(
+            frame({"id": [None], "cluster_id": [None], "is_keeper": [None]})
+        )
     return out
 
 
@@ -273,10 +290,11 @@ def connected_components(
 
     - **driver** (at most ``broadcast_max_nodes // 2`` pairs, the
       common case — near-dup graphs are sized by the duplicate
-      population, not the corpus): after the input checkpoint, ONE
-      bounded collect fetches the pairs and proves they fit, and the
-      rounds run in numpy on the driver; the result is a
-      ``createDataFrame`` of the caller's session.
+      population, not the corpus): after the input checkpoint, a
+      count of its pairs picks the regime, ONE collect fetches them,
+      and the rounds run in numpy on the driver; the result is
+      an Arrow-built frame of the caller's session, whatever its Arrow
+      conf.
     - **broadcast** (more pairs, node table ``<= broadcast_max_nodes``):
       each round is ONE FUSED min-aggregate — the broadcast label
       join's neighbor contributions union the labels' own rows and a
@@ -298,7 +316,7 @@ def connected_components(
     # reads the pair relation twice (both edge directions), and the
     # upstream pair producers (LSH banding, Jaccard verify) are the
     # expensive part of the whole clustering query — without this they
-    # would execute again after the bounded collect
+    # would execute again
     directed = data_checkpoint(
         pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     )
@@ -307,21 +325,23 @@ def connected_components(
     def _both_ways(d: DataFrame) -> DataFrame:
         return d.union(d.select(F.col("b").alias("a"), F.col("a").alias("b")))
 
-    # one job fetches the pairs AND proves they fit the driver regime.
-    # ``_collect_as_arrow`` backs ``toPandas`` on every PySpark >= 3.0
-    # (the public ``toArrow`` is 4.0+), needs no Arrow conf on the
-    # caller's session, and keeps nulls as a validity mask instead of
-    # turning a nullable long column into float64
-    max_pairs = broadcast_max_nodes // 2
-    batches = directed.limit(max_pairs + 1)._collect_as_arrow()
-    if sum(b.num_rows for b in batches) <= max_pairs:
+    # the pairs are counted BEFORE anything is fetched: a graph past the
+    # driver regime never ships a row to the driver.  The count runs on
+    # the checkpoint's row RDD — one job over the blocks just
+    # materialized, where a DataFrame count under AQE is two (its
+    # shuffle stage and its result).  ``_collect_as_arrow`` backs
+    # ``toPandas`` on every PySpark >= 3.0 (the public ``toArrow`` is
+    # 4.0+), needs no Arrow conf on the caller's session, and keeps
+    # nulls as a validity mask instead of turning a nullable long column
+    # into float64
+    n_pairs = directed._jdf.queryExecution().toRdd().count()
+    if not _may_exceed_cutover(n_pairs, broadcast_max_nodes):
         return _components_on_driver(
-            batches,
+            directed._collect_as_arrow(),
             caller,
             _both_ways(directed).schema["a"].dataType,
             max_iterations,
         )
-    del batches
     # ONE symmetrize-dedup shuffle, captured with hash(a) on an AQE-off
     # clone: the per-partition dropDuplicates rides the repartition
     # exchange (hash(a) satisfies the (a, b) clustering), and past the

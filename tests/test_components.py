@@ -37,16 +37,61 @@ def test_chain_triangle_and_disjoint(spark):
     assert keepers == {1, 10, 20}
 
 
-def test_convergence_bound_raises(spark):
+def _in_band(edges, monkeypatch):
+    """``broadcast_max_nodes`` kwargs that run ``edges`` in the broadcast
+    band: the node table fits the bound, and more than bound / 2 pairs
+    put the graph past the driver regime — which is made to fail, so a
+    band test cannot pass on the driver's rounds."""
+    from bdq_spark.operators import components
+
+    n_nodes = len({v for e in edges for v in e})
+    assert 2 * len(edges) > n_nodes
+
+    def unreachable(*args):
+        raise AssertionError("the driver regime ran in the broadcast band")
+
+    monkeypatch.setattr(components, "_components_on_driver", unreachable)
+    return {"broadcast_max_nodes": n_nodes}
+
+
+def _check_convergence_bound(spark, kw_for):
     # a 6-node path needs more than 1 round
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(6)], "id_a long, id_b long"
-    )
+    edges = [(i, i + 1) for i in range(6)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    kw = kw_for(edges)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iterations=1)
+        connected_components(pairs, max_iterations=1, **kw)
     # and converges with a sane bound
-    out = _collect(connected_components(pairs))
+    out = _collect(connected_components(pairs, **kw))
     assert {v[0] for v in out.values()} == {0}
+
+
+def test_convergence_bound_raises(spark):
+    _check_convergence_bound(spark, lambda edges: {})
+
+
+def test_convergence_bound_raises_in_broadcast_band(spark, monkeypatch):
+    _check_convergence_bound(spark, lambda e: _in_band(e, monkeypatch))
+
+
+def _check_geometric_boundaries(spark, kw_for):
+    # 5-node path: fixpoint after round 4, first changed==0 at round 5
+    # -> geometric checks (1, 2, 4, 8) detect at round 8; labels must
+    # still be the every-round answer
+    edges = [(i, i + 1) for i in range(4)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    out = _collect(connected_components(pairs, **kw_for(edges)))
+    assert {k: v[0] for k, v in out.items()} == {i: 0 for i in range(5)}
+    # raise boundary unchanged: an 8-node path needs 7 propagation
+    # rounds + 1 no-change round; max_iterations=7 must still raise,
+    # 8 must converge (the final geometric check is pinned to the bound)
+    edges8 = [(i, i + 1) for i in range(7)]
+    path8 = spark.createDataFrame(edges8, "id_a long, id_b long")
+    kw8 = kw_for(edges8)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(path8, max_iterations=7, **kw8)
+    out8 = _collect(connected_components(path8, max_iterations=8, **kw8))
+    assert {v[0] for v in out8.values()} == {0}
 
 
 def test_geometric_check_boundaries(spark):
@@ -55,27 +100,12 @@ def test_geometric_check_boundaries(spark):
     semantics: a diameter that lands BETWEEN two check rounds is
     detected late but returns identical labels (overshoot rounds are
     no-ops), and the max_iterations raise fires at exactly the same
-    bound as the every-round loop did."""
+    bound as the every-round loop did.  At the default bound these
+    graphs take CC's driver regime, which must keep the same bound;
+    the broadcast band runs the same checks below."""
     from bdq_spark.operators.components import kcore
 
-    # 5-node path: fixpoint after round 4, first changed==0 at round 5
-    # -> geometric checks (1, 2, 4, 8) detect at round 8; labels must
-    # still be the every-round answer
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(4)], "id_a long, id_b long"
-    )
-    out = _collect(connected_components(pairs))
-    assert {k: v[0] for k, v in out.items()} == {i: 0 for i in range(5)}
-    # raise boundary unchanged: an 8-node path needs 7 propagation
-    # rounds + 1 no-change round; max_iterations=7 must still raise,
-    # 8 must converge (the final geometric check is pinned to the bound)
-    path8 = spark.createDataFrame(
-        [(i, i + 1) for i in range(7)], "id_a long, id_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(path8, max_iterations=7)
-    out8 = _collect(connected_components(path8, max_iterations=8))
-    assert {v[0] for v in out8.values()} == {0}
+    _check_geometric_boundaries(spark, lambda edges: {})
     # kcore boundary (every-round checks + shared-broadcast anti-joins):
     # a 3-level pendant path peels in exactly 3 rounds — max_rounds=4
     # converges, max_rounds=2 raises
@@ -87,6 +117,10 @@ def test_geometric_check_boundaries(spark):
     assert got == {(i, 2) for i in range(1, 7)}
     with pytest.raises(RuntimeError, match="did not converge"):
         kcore(df, k=2, max_rounds=2).collect()
+
+
+def test_geometric_check_boundaries_in_broadcast_band(spark, monkeypatch):
+    _check_geometric_boundaries(spark, lambda e: _in_band(e, monkeypatch))
 
 
 def _union_find(edges):
@@ -134,6 +168,12 @@ def test_matches_union_find(spark, edges):
     assert {r[0]: r[1] for r in got} == _union_find(edges)
     # the driver regime (default bound) equals the co-partitioned one
     assert got == _cc_rows(pairs, broadcast_max_nodes=0)
+    # and the broadcast band: a bound of the node count fits the node
+    # table, and any graph with a shared endpoint has more than half
+    # that many pairs (all-disjoint pairs cannot reach the band and run
+    # the driver regime again)
+    n_nodes = len({v for e in edges for v in e})
+    assert got == _cc_rows(pairs, broadcast_max_nodes=n_nodes)
 
 
 # regime parity: the driver regime (default bound on a small graph), the
@@ -190,10 +230,10 @@ def test_null_ids_same_in_every_regime(spark, bound):
 
 
 def test_small_graph_job_count(spark):
-    """Guard the driver regime's job budget: the input checkpoint and the
-    one bounded collect.  With Arrow on (``get_spark``'s default) the
-    result is a ``LocalRelation`` whose collect runs no job; without it
-    the result is RDD-backed and the caller's collect is one more."""
+    """Guard the driver regime's job budget: the input checkpoint, the
+    count of its pairs and the one collect.  The result is built through
+    Arrow whatever the session's Arrow conf, so it is a
+    ``LocalRelation`` and the caller's collect runs no job either way."""
     sc = spark.sparkContext
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(0, 40, 2)], "id_a long, id_b long"
@@ -201,7 +241,7 @@ def test_small_graph_job_count(spark):
     arrow = "spark.sql.execution.arrow.pyspark.enabled"
     was = spark.conf.get(arrow)
     try:
-        for on, budget in (("false", 3), ("true", 2)):
+        for on in ("false", "true"):
             spark.conf.set(arrow, on)
             group = f"cc-job-guard-{on}"
             sc.setJobGroup(group, group)
@@ -210,7 +250,7 @@ def test_small_graph_job_count(spark):
             finally:
                 sc.setLocalProperty("spark.jobGroup.id", None)
             n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-            assert n_jobs <= budget, (on, n_jobs)
+            assert n_jobs <= 3, (on, n_jobs)
     finally:
         spark.conf.set(arrow, was)
 
@@ -661,6 +701,9 @@ def _run_isolated_loop(spark, op, bound, fail):
         )
         for bound in (None, 0)
     ]
+    # 5 pairs over 8 nodes: past the driver regime (2 * 5 > 8), node
+    # table inside the bound — CC's broadcast band
+    + [pytest.param("connected_components", 8, id="connected_components-band")]
     + [("train_bpe", None)],
 )
 def test_iterative_loops_never_write_caller_session_conf(
@@ -676,7 +719,9 @@ def test_iterative_loops_never_write_caller_session_conf(
     co-partitioned regime of the graph operators; there the keyed
     checkpoints cross between the clone and the caller's session, and
     every round must still plan exactly ONE exchange (its aggregate) —
-    the partitioning reuse that regime exists for."""
+    the partitioning reuse that regime exists for.  CC at the default
+    bound runs its rounds on the driver; ``connected_components-band``
+    reaches its broadcast rounds on a pinned clone."""
     keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
     before = {k: spark.conf.get(k) for k in keys}
     seen = []

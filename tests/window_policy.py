@@ -55,8 +55,8 @@ TOUCHED = {
         "pipeline_odd_even",
     ],
     # connected components runs graphs of at most
-    # broadcast_max_nodes // 2 pairs on the driver (one bounded pair
-    # collect, numpy min-label rounds) instead of the broadcast Spark
+    # broadcast_max_nodes // 2 pairs on the driver (a pair count, one
+    # pair collect, numpy min-label rounds) instead of the broadcast Spark
     # loop; every CC-backed entry is such a graph.  (The earlier
     # private-clone isolation of CC, PageRank and kcore is gated by the
     # session.py entries above.)
